@@ -71,8 +71,11 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
             # caller who deliberately set the value TO the unset default
             # is indistinguishable from nobody-chose and gets the engine
             # default; route such overrides through the builder.
+            # one-key lookup on the live context conf: getConf() would
+            # copy every entry over py4j, and a started context's conf
+            # does not change
             explicitly_built = (
-                spark.sparkContext.getConf().get(key, None) is not None
+                spark.sparkContext._conf.get(key, None) is not None
             )
             runtime_overridden = spark.conf.get(key, None) != spark_default
             if not explicitly_built and not runtime_overridden:

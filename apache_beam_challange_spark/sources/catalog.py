@@ -24,8 +24,12 @@ exact DuckDB oracle twin:
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BASE_TABLES = (
     "region",
@@ -91,7 +95,6 @@ def warehouse_path(sf_dir: str, layer: str, source_table: str) -> str:
     rebuilds it. Root overridable via SPARK_GRAFT_WAREHOUSE (default
     ./spark-warehouse, gitignored)."""
     import hashlib
-    import os
 
     src = os.path.join(sf_dir, f"{source_table}.parquet")
     try:
@@ -124,21 +127,54 @@ def is_materialized(path: str, parts: tuple[str, ...] = ()) -> bool:
     # builder commits the siblings BEFORE the primary path, and the check
     # requires _SUCCESS in ALL of them, so a crash mid-sequence can never
     # present a torn artifact as materialized.
-    import os
-
     return all(
         os.path.exists(os.path.join(p, "_SUCCESS")) for p in (path, *parts)
     )
 
 
+#: Schemas Spark inferred from single-file tables, keyed by
+#: (absolute path, st_size, st_mtime_ns): a rewritten file changes size or
+#: mtime and is inferred afresh. Only the schema is shared, never a
+#: DataFrame, so the cache is independent of the session that filled it.
+#: Two threads racing on a first read both infer and store the same value.
+_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+
+
+def _schema_key(path: str) -> tuple[str, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one base parquet table; schema comes from the parquet footer."""
+    """Read one base parquet table; schema comes from the parquet footer.
+
+    Inferring a parquet schema costs one Spark job per read. For a regular
+    file the inferred schema is kept in ``_SCHEMA_CACHE`` under the file's
+    absolute path, size and mtime, and later reads of the unchanged file
+    pass it to ``spark.read.schema(...)``: they start no job, but still
+    build a fresh relation and file listing. Directories (Spark-written
+    tables) are inferred on every read."""
     from apache_beam_challange_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(path)
+    schema = _SCHEMA_CACHE.get(key) if key else None
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key:
+            _SCHEMA_CACHE[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     for c in _NANO_TS_COLS.get(name, ()):
-        if dict(df.dtypes).get(c) == "bigint":
+        if dtypes.get(c) == "bigint":
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
             )
@@ -179,7 +215,9 @@ def register_views(
     views, enabling the ``spark.sql`` facade (the engine's analog of the
     reference's SQL-pushdown route, ``pipelines/sql_cycle_rides.py:35-41``).
     ``tables`` restricts registration for callers that know their footprint
-    (view registration is lazy, but each one still reads a parquet footer)."""
+    (view registration is lazy; each view's first ``load_table`` of a file
+    infers its schema with one Spark job, later ones reuse the cached
+    schema)."""
     for name in tables if tables is not None else BASE_TABLES:
         if name == "stations":
             stations(spark, sf_dir).createOrReplaceTempView("stations")

@@ -9,7 +9,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from apache_beam_challange_spark.session import get_spark  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.001"
+#: base directory of the generated test tables (one sub-directory per scale)
+TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+SF_DIR = f"{TESTDATA}/sf0.001"
 
 
 @pytest.fixture(scope="session")

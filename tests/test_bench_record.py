@@ -1,9 +1,11 @@
 """The driver captures only the last ~2000 chars of bench stdout; a final
 compact line that outgrows it comes back `parsed: null` and the round loses
 its round-over-round comparison (BENCH_r12 did exactly that — VERDICT r13
-#4 asks for this pin). These tests render the REAL final line from the
-committed BENCH_DETAIL.json via the same pure function bench.py prints
-through, worst-cased with the maximum plausible pin load."""
+#4 asks for this pin). These tests render the final line from a detail
+record a real ``bench.py`` run wrote (committed as
+``tests/fixtures/bench_detail.json``; the run's own BENCH_DETAIL.json is
+not tracked) via the same pure function bench.py prints through,
+worst-cased with the maximum plausible pin load."""
 
 from __future__ import annotations
 
@@ -23,13 +25,8 @@ MAX_LINE = 1600
 
 
 def _detail() -> dict:
-    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
-        d = json.load(f)
-    # records written before round 14 lack the scaling-probe fields
-    d.setdefault("parallelism", 32)
-    d.setdefault("shuffle_partitions", 32)
-    d["queries"].setdefault("scaling_canary", 9.999)
-    return d
+    with open(os.path.join(REPO, "tests", "fixtures", "bench_detail.json")) as f:
+        return json.load(f)
 
 
 def test_final_line_fits_driver_tail_capture():
@@ -72,3 +69,18 @@ def test_final_line_carries_driver_contract_fields():
     total = round(sum(rec["queries"][n] for n in bench.HEADLINE), 3)
     assert abs(rec["value"] - total) < 0.005
     assert "parallelism" in rec and "shuffle_partitions" in rec
+
+
+def test_scaling_canary_runs_under_ansi(spark):
+    """The canary's checksum must not overflow a long sum under
+    spark.sql.ansi.enabled=true (Spark 4's default)."""
+    n = 200_000
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        rows = bench._scaling_canary(spark, n).collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert sum(r.c for r in rows) == n
+    assert all(0 <= r.s < r.c << 20 for r in rows)

@@ -18,9 +18,9 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 import apache_beam_challange_spark.plans.wave4 as w4
 import apache_beam_challange_spark.plans.wave6 as w6
+from conftest import SF_DIR as SF_SMALL, TESTDATA
 
-SF_SMALL = "/root/testdata/sf0.001"
-SF_BIG = "/root/testdata/sf0.01"
+SF_BIG = f"{TESTDATA}/sf0.01"
 
 
 @pytest.fixture()

@@ -1415,3 +1415,24 @@ def test_huber_negative_bucket_falls_back(spark, monkeypatch):
         out = w6.huber_location_by_type(spark, d).collect()
     assert calls, "negative bucket must route to _huber_irls_spark"
     assert len(out) == 1 and out[0].n == 5
+
+
+def test_huber_null_bucket_falls_back(spark, monkeypatch):
+    """A NULL value makes a NULL cent bucket, which the driver solve cannot
+    replay as an integer; it must route to the in-Spark IRLS."""
+    rows = [
+        _ev(i, dt.datetime(2024, 1, 1), 1, "view", v)
+        for i, v in enumerate([1.0, 2.0, None, 3.0, 2.5])
+    ]
+    calls: list[int] = []
+    orig = w6._huber_irls_spark
+    monkeypatch.setattr(
+        w6,
+        "_huber_irls_spark",
+        lambda s, h: (calls.append(1), orig(s, h))[1],
+    )
+    with tempfile.TemporaryDirectory() as d:
+        _write_events(spark, rows, d)
+        out = w6.huber_location_by_type(spark, d).collect()
+    assert calls, "NULL bucket must route to _huber_irls_spark"
+    assert len(out) == 1 and out[0].n == 5
