@@ -21,12 +21,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-#: Confs the engine depends on that are runtime-settable — applied
-#: defensively to ANY session the engine code receives (the build driver
-#: hands us its own SparkSession, built without our factory).
+#: Confs the engine depends on that are runtime-settable — set by
+#: get_spark's builder and applied defensively to ANY session the engine
+#: code receives (the build driver hands us its own SparkSession, built
+#: without our factory).
 RUNTIME_CONFS = {
     # testdata parquet carries TIMESTAMP(NANOS); without this every scan
-    # of events/orders/lineitem throws PARQUET_TYPE_ILLEGAL
+    # of events/orders/lineitem throws PARQUET_TYPE_ILLEGAL. Read as raw
+    # longs, the catalog converts to timestamp_ntz at micro precision,
+    # matching DuckDB's truncation.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # deterministic timestamp semantics for oracle comparison
     "spark.sql.session.timeZone": "UTC",
@@ -36,15 +39,13 @@ RUNTIME_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
-#: Applied only when the session has no explicit value yet —
-#: ensure_session_confs previously force-set this and silently clobbered
-#: a caller's get_spark(shuffle_partitions=N) on the first load_table()
-#: (found by review: the tests' shuffle_partitions=8 actually ran at the
-#: env default). Values are (engine default, Spark's own unset default):
-#: a session whose CURRENT runtime value already differs from Spark's
-#: unset default was set by the caller (builder OR spark.conf.set) and is
-#: respected either way (ADVICE r5: the SparkContext conf alone misses
-#: runtime spark.conf.set calls).
+#: Applied only when the session has no explicit value yet, so a caller's
+#: get_spark(shuffle_partitions=N) is never clobbered by a later
+#: load_table(). Values are (engine default, Spark's own unset default): a
+#: session whose CURRENT runtime value already differs from Spark's unset
+#: default was set by the caller (builder OR spark.conf.set) and is
+#: respected either way, since the SparkContext conf alone misses runtime
+#: spark.conf.set calls.
 DEFAULT_ONLY_CONFS = {
     # stateful streaming disables AQE, so the raw shuffle partition count
     # matters there; size it to the local core budget
@@ -102,22 +103,14 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=RUNTIME_CONFS)
         # --- plan quality / scale posture ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- python interop ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # The driver's parquet files carry TIMESTAMP(NANOS) (unsupported by
-        # Spark's reader); read them as raw longs — the catalog converts to
-        # timestamp_ntz at micro precision, matching DuckDB's truncation.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # --- keep local runs quiet and deterministic ---
-        .config("spark.sql.session.timeZone", "UTC")
+        # --- keep local runs quiet ---
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

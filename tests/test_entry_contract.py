@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 import __spark_entry__ as entrymod
 
 
@@ -40,7 +38,6 @@ def test_extended_tier_shape():
     assert rows_only == {"simhash_signatures_xxhash64_perf"}
 
 
-@pytest.mark.slow
 def test_registry_callables_run(spark, sf_dir):
     """Every registered query (both tiers) executes at sf0.001."""
     for name, fn in entrymod.all_queries().items():

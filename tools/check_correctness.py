@@ -11,11 +11,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pyarrow as pa
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Spark integral dtypes: a DuckDB oracle column paired with one of these must
 # come back as an Arrow integer, NOT decimal128 (HUGEINT — what DuckDB types a
@@ -54,7 +57,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from apache_beam_challange_spark.session import get_spark
 

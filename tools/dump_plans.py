@@ -4,9 +4,11 @@ partial aggregation, codegen)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 FLAGSHIPS = [
     "q2_top_pairs_ops",
@@ -318,7 +320,7 @@ def main() -> None:
         df = qs[name](spark, "/root/testdata/sf0.01")
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(FLAGSHIPS)} plans)")
 

@@ -6,11 +6,13 @@ Usage: python tools/solo_measure.py [-n REPS] name [name ...]
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -19,8 +21,6 @@ def main() -> None:
     if args and args[0] == "-n":
         reps = int(args[1])
         args = args[2:]
-    import os
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from apache_beam_challange_spark.session import get_spark
     import __spark_entry__ as e
