@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double
+from apache_beam_challange_spark.sources.catalog import local_frame
 
 
 def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
@@ -113,7 +114,8 @@ def kmeans_centroids(
             state.setdefault(r["centroid_id"], []).append(
                 (r["pos"], r["s"] / (r["n"] * float(scale)))
             )
-        cents = spark.createDataFrame(
+        cents = local_frame(
+            spark,
             [
                 (cid, [v for _, v in sorted(pvs)])
                 for cid, pvs in sorted(state.items())

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine
+from apache_beam_challange_spark.sources.catalog import local_frame
 
 
 def _query_vec(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -685,7 +686,7 @@ def _multitable_buckets(
             g = p * dim + idx + 1
             s = math.sin(float(g)) * 43758.5453
             plane_rows.append((p, idx + 1, s - math.floor(s) - 0.5))
-    planes = spark.createDataFrame(plane_rows, "p int, j int, h double")
+    planes = local_frame(spark, plane_rows, "p int, j int, h double")
     comp = embeddings.select(
         "vec_id", F.posexplode(as_double(F.col("embedding"))).alias("j0", "x")
     ).select("vec_id", (F.col("j0") + 1).alias("j"), "x")
@@ -1019,9 +1020,7 @@ def nsw_topk(
         beam,
         rounds,
     )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, cos double"
-    )
+    out = local_frame(spark, sorted(vis.items()), "vec_id long, cos double")
     return (
         out.join(embeddings.select("vec_id", "label"), "vec_id")
         .select(
@@ -1099,7 +1098,8 @@ def nsw_topk_batch(
         beam,
         rounds,
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(q, v, c) for q in qids for v, c in sorted(visited[q].items())],
         "query_vec_id long, vec_id long, cos double",
     )
@@ -1671,9 +1671,7 @@ def vamana_topk(
         beam,
         rounds,
     )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, q_fp long"
-    )
+    out = local_frame(spark, sorted(vis.items()), "vec_id long, q_fp long")
     return (
         out.join(embeddings.select("vec_id", "label"), "vec_id")
         .select(
@@ -1743,7 +1741,8 @@ def vamana_topk_batch(
         beam,
         rounds,
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(q, v, s) for q in qids for v, s in sorted(visited[q].items())],
         "query_vec_id long, vec_id long, q_fp long",
     )
@@ -2165,9 +2164,7 @@ def hnsw_topk(
             b,
             rr,
         )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, cos double"
-    )
+    out = local_frame(spark, sorted(vis.items()), "vec_id long, cos double")
     return (
         out.join(embeddings.select("vec_id", "label"), "vec_id")
         .select(
@@ -2293,7 +2290,8 @@ def hnsw_topk_batch(
             b,
             rr,
         )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(q, v, c) for q in qids for v, c in sorted(visited[q].items())],
         "query_vec_id long, vec_id long, cos double",
     )

@@ -13,7 +13,7 @@ from pyspark.sql.functions import pandas_udf
 
 from apache_beam_challange_spark.operators.skew import salted_group_count
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 
 @query(
@@ -53,9 +53,10 @@ def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, so the non-equi predicate is evaluated map-side — no
     shuffle of the fact table."""
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 25.0), ("mid", 25.0, 75.0), ("high", 75.0, 1e9)],
-        ["band", "lo", "hi"],
+        "band string, lo double, hi double",
     )
     return (
         ev.join(
@@ -853,7 +854,7 @@ def kll_register_table(ev: DataFrame) -> DataFrame:
 
     spark = ev.sparkSession
     powers = F.broadcast(
-        spark.createDataFrame(_KLL_POWERS, "l int, p long")
+        local_frame(spark, _KLL_POWERS, "l int, p long")
     )
     vals = ev.select(
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("v"),
@@ -1017,7 +1018,7 @@ def kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    qs = spark.createDataFrame([(25,), (50,), (75,), (90,), (99,)], "q_pct int")
+    qs = local_frame(spark, [(25,), (50,), (75,), (90,), (99,)], "q_pct int")
     return (
         cum.crossJoin(F.broadcast(qs))
         .crossJoin(F.broadcast(tot))

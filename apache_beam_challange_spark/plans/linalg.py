@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 _DIM = 64
 _SG = 1_000_000_000  # Gram fixed-point scale (1e-9 resolution per product)
@@ -118,8 +118,8 @@ def pca_power_iteration_top_component(
     v, norm1 = _power_component(spark, sf_dir)
     eig = float(norm1) / 1000000.0 / float(_SG)
     out = [(i, float(v[i]) / 1000000.0, eig) for i in range(1, _DIM + 1)]
-    return spark.createDataFrame(
-        out, schema="dim long, loading double, eigval_est double"
+    return local_frame(
+        spark, out, "dim long, loading double, eigval_est double"
     ).orderBy("dim")
 
 
@@ -357,8 +357,8 @@ def kcenter_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         chosen.append((r, row["vec_id"], float(row["md"]) / _KC_SD))
-    return spark.createDataFrame(
-        chosen, schema="sel_round long, vec_id long, max_dot_at_pick double"
+    return local_frame(
+        spark, chosen, "sel_round long, vec_id long, max_dot_at_pick double"
     ).orderBy("sel_round")
 
 

@@ -48,7 +48,7 @@ from apache_beam_challange_spark.operators.similarity import (
     probe_index_candidates,
 )
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 _TOPK = 20
 _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM = 16, 4, 65
@@ -253,7 +253,7 @@ def mips_lsh_write_index(emb: DataFrame, path: str) -> None:
     stale_marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(stale_marker):
         os.remove(stale_marker)
-    spark.createDataFrame([(float(m2),)], "m2 double").coalesce(1).write.mode(
+    local_frame(spark, [(float(m2),)], "m2 double").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path + "_meta")
     lsh_write_index(

@@ -13,9 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 from apache_beam_challange_spark.streaming.stateful import running_user_counts
 from apache_beam_challange_spark.streaming.windows import (
+    bounded_stream_partitions,
     events_stream,
     run_to_memory,
     session_counts,
@@ -603,14 +604,12 @@ def _stream_cdc_merge(spark: SparkSession, sf_dir: str, n_files: int) -> DataFra
             )
             state = read_published(bs, state_base)
             if state is None:
-                state = bs.createDataFrame([], state_schema)
+                state = local_frame(bs, [], state_schema)
             state.createOrReplaceTempView("__stream_cdc_state")
             publish(merge_into(bs, _STREAM_CDC_MERGE_SQL), state_base)
 
         stream = events_stream(spark, src, max_files_per_trigger=1)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with bounded_stream_partitions(spark):
             q = (
                 stream.writeStream.foreachBatch(apply_batch)
                 .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -618,8 +617,6 @@ def _stream_cdc_merge(spark: SparkSession, sf_dir: str, n_files: int) -> DataFra
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         # materialize before the tmp state dir vanishes with the context
         final = read_published(spark, state_base).localCheckpoint()
     return (

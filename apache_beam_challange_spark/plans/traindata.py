@@ -54,7 +54,7 @@ from apache_beam_challange_spark.plans.extensions import (
 from apache_beam_challange_spark.functions.text import QUALITY_SCORE_SQL
 from apache_beam_challange_spark.plans.curation import _FUZZY_BLOCK_CAP
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 # --- sequence packing (concat-and-chunk) -----------------------------------
 
@@ -2188,8 +2188,8 @@ def mmr_diversified_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         selected.append((t, best, rel[best][0], best_score))
         chosen.append(best)
         remaining.remove(best)
-    out = spark.createDataFrame(
-        selected, "rank int, vec_id long, label int, mmr double"
+    out = local_frame(
+        spark, selected, "rank int, vec_id long, label int, mmr double"
     )
     return out.select(
         "rank", "vec_id", "label", F.round(F.col("mmr"), 6).alias("mmr_score")

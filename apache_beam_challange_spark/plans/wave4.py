@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 
 # --- as-of join with payload (union-and-carry, zero joins) -------------------
@@ -969,9 +969,7 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for pa, sp in sp_d.items()
         }
-    scores = spark.createDataFrame(
-        sorted(s_d.items()), "pk long, s long"
-    )
+    scores = local_frame(spark, sorted(s_d.items()), "pk long, s long")
     return (
         scores.join(wtot, scores.pk == wtot.pa)
         .select(

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 #: per-term fixed-point scale for cross-row float sums (wave5 discipline)
 _FP9 = 1_000_000_000.0
@@ -377,7 +377,7 @@ def obf_group_sequential_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("total") % F.lit(_OBF_PACK)).alias("n"),
     )
     looks = F.broadcast(
-        walk.sparkSession.createDataFrame(_OBF_BOUNDS, "k long, bound double")
+        local_frame(walk.sparkSession, _OBF_BOUNDS, "k long, bound double")
     )
     hit = walk.join(looks, F.expr("i = (k * n) div 5"))
     num = (F.lit(20) * F.col("cum_pos") - F.lit(3) * F.col("i")).cast("double")
@@ -795,7 +795,7 @@ def ndcg_at_k_value_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_b").over(w_cur).cast("long").alias("b"),
     ).filter(F.col("a") <= _NDCG_K)
     disc = F.broadcast(
-        ev.sparkSession.createDataFrame(_NDCG_DISC, "i long, d_fp long")
+        local_frame(ev.sparkSession, _NDCG_DISC, "i long, d_fp long")
     )
     grp = (
         pos.join(disc, (F.col("i") >= F.col("a")) & (F.col("i") <= F.col("b")))
@@ -1222,7 +1222,8 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     e_all = sum(r[3] for r in eff_rows)
     return (
-        spark_s.createDataFrame(
+        local_frame(
+            spark_s,
             [r + (e_all,) for r in eff_rows],
             "channel string, base_fp long, rm_fp long, "
             "effect_fp long, e_all long",
@@ -1597,7 +1598,7 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # tiny; feeds two sides of the pair join
     )
     fact = F.broadcast(
-        spark_s.createDataFrame(_SHAP_FACT, "i long, f long")
+        local_frame(spark_s, _SHAP_FACT, "i long, f long")
     )
     vwith = v.select(F.col("s").alias("s2"), F.col("v_s").alias("v_with"))
     terms = (
@@ -2220,8 +2221,10 @@ def huber_location_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                 swv += c * w * vb
             m_fp = (swv * 1_000_000) // sw
         out_rows.append((etype, n, med, mad, m_fp))
-    out = spark.createDataFrame(
-        out_rows, "event_type string, n long, med long, mad long, m_fp long"
+    out = local_frame(
+        spark,
+        out_rows,
+        "event_type string, n long, med long, mad long, m_fp long",
     )
     return out.select(
         "event_type",
@@ -2595,7 +2598,8 @@ def ipf_raking_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t, h, _n in cell_rows
         }
     spark_s = ev.sparkSession
-    out = spark_s.createDataFrame(
+    out = local_frame(
+        spark_s,
         [(t, h, n, w[(t, h)]) for t, h, n in cell_rows],
         "t string, h long, n long, w_fp long",
     )
@@ -3170,10 +3174,7 @@ def fs_em_parameter_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the same left-associated IEEE double chain (products, one
     # division, floor(x*1e12 + 0.5) — no libm), the M-steps are exact
     # Python-int sums with `//` (== Spark `div` on these nonnegative
-    # decimals), GREATEST == max. The empty-pattern case (every block
-    # over the cap — the sf0.1 fixture) reproduces Spark's empty-agg
-    # semantics exactly: SUM over no rows is NULL, so every parameter is
-    # NULL from round 1 on and n_pairs is NULL.
+    # decimals), GREATEST == max.
     pat_rows = [
         (r["g"], r["n"])
         for r in a.join(
@@ -3188,12 +3189,12 @@ def fs_em_parameter_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spark_s = part.sparkSession
     fp_f = float(_EM_FP)
-    if not pat_rows:
-        p_fp = None
-        m = [None] * 4
-        u = [None] * 4
-        n_pairs = None
-    else:
+    # With no blocked pair (every block over the cap or of one part — the
+    # sf0.1 fixture) the oracle's recursive walk joins no pattern row, so
+    # its GROUP BY s.r emits no round-1 row, `fin` is empty and the
+    # answer has zero rows: the engine returns the same empty frame.
+    out_rows = []
+    if pat_rows:
         import math
 
         p_fp = _EM_P0
@@ -3228,12 +3229,13 @@ def fs_em_parameter_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
             m = [s_m[j] * _EM_FP // max(s_nw, 1) for j in range(4)]
             u = [s_u[j] * _EM_FP // max(s_nfpw, 1) for j in range(4)]
         n_pairs = sum(n for _gv, n in pat_rows)
-    out_rows = [
-        (name, m[j], u[j], p_fp, n_pairs)
-        for j, (name, _bit) in enumerate(_EM_FIELDS)
-    ]
+        out_rows = [
+            (name, m[j], u[j], p_fp, n_pairs)
+            for j, (name, _bit) in enumerate(_EM_FIELDS)
+        ]
     return (
-        spark_s.createDataFrame(
+        local_frame(
+            spark_s,
             out_rows,
             "field string, m_fp long, u_fp long, p_fp long, n_pairs long",
         )
@@ -3537,13 +3539,12 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nxt[t] = nxt.get(t, 0) + (pv * c) // tot[f]
         pi = nxt
     spark_s = ev.sparkSession
-    mat = spark_s.createDataFrame(
+    mat = local_frame(
+        spark_s,
         [(f, t, c, tot[f]) for f, t, c in trans_rows],
         "f string, t string, c long, n long",
     )
-    pi_df = spark_s.createDataFrame(
-        sorted(pi.items()), "s string, pi_fp long"
-    )
+    pi_df = local_frame(spark_s, sorted(pi.items()), "s string, pi_fp long")
     terms = (
         mat.select(
             "f",
@@ -3809,7 +3810,7 @@ def audio_dominant_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     tw = F.broadcast(
-        spark_s.createDataFrame(_DFT_TWIDDLE, "m long, c_fp long, s_fp long")
+        local_frame(spark_s, _DFT_TWIDDLE, "m long, c_fp long, s_fp long")
     )
     bins = F.broadcast(
         spark_s.range(1, _DFT_N // 2).select(F.col("id").alias("k"))
@@ -3970,10 +3971,10 @@ def image_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     cu = F.broadcast(
-        spark_s.createDataFrame(_DCT_CU, "u long, cx long, cu_fp long")
+        local_frame(spark_s, _DCT_CU, "u long, cx long, cu_fp long")
     )
     cv = F.broadcast(
-        spark_s.createDataFrame(_DCT_CV, "v long, cy long, cv_fp long")
+        local_frame(spark_s, _DCT_CV, "v long, cy long, cv_fp long")
     )
     d38 = "decimal(38,0)"
     coef = (
@@ -4180,12 +4181,10 @@ def platt_scaling_value_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         det = h11 * h22 - h12 * h12
         a_fp = a_fp + int(math.floor((h22 * g1 - h12 * g2) / det * fp + 0.5))
         b_fp = b_fp + int(math.floor((h11 * g2 - h12 * g1) / det * fp + 0.5))
-    cells_df = spark_s.createDataFrame(
-        cells_rows, "bin long, n_b long, y_b long"
+    cells_df = local_frame(
+        spark_s, cells_rows, "bin long, n_b long, y_b long"
     )
-    params = spark_s.createDataFrame(
-        [(a_fp, b_fp)], "a_fp long, b_fp long"
-    )
+    params = local_frame(spark_s, [(a_fp, b_fp)], "a_fp long, b_fp long")
     j = cells_df.crossJoin(F.broadcast(params))
     lin = (
         F.col("a_fp").cast("double") / F.lit(fp) * F.col("bin")

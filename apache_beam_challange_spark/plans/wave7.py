@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.operators.jpeg import JPEG_Q, JPEG_T_FP6
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import load_table, local_frame
 
 # --- baseline JPEG encode -> decode reconstruction audit -----------------------
 
@@ -519,10 +519,10 @@ def image_jpeg_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     cu = F.broadcast(
-        spark_s.createDataFrame(_DCT_CU, "u long, cx long, cu_fp long")
+        local_frame(spark_s, _DCT_CU, "u long, cx long, cu_fp long")
     )
     cv = F.broadcast(
-        spark_s.createDataFrame(_DCT_CV, "v long, cy long, cv_fp long")
+        local_frame(spark_s, _DCT_CV, "v long, cy long, cv_fp long")
     )
     d38 = "decimal(38,0)"
     coef = (

@@ -181,6 +181,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-local ``rows`` (tuples in ``ddl`` column order) as a frame.
+
+    ``createDataFrame(list, ddl)`` parallelizes the rows through a
+    Python-worker map that reruns ``defaultParallelism`` tasks for every
+    job reading the frame. An Arrow table instead reaches the JVM once as
+    a ``LocalRelation`` (``LocalTableScan``), so no Python worker runs.
+    Values stay exact: ints as int32/int64, floats as float64 with NaN
+    kept apart from ``None`` (null), strings and arrays as given."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def stations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived station dimension (shape of ``cycle_stations`` as queried,
     ``pipelines/stations.py:57-59`` / ``pipelines/total_distance.py:103-106``)."""

@@ -13,7 +13,9 @@ deployment would run against Kafka, swapped source/sink only.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,6 +166,26 @@ def session_counts(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def bounded_stream_partitions(spark: SparkSession) -> Iterator[None]:
+    """Set ``spark.sql.shuffle.partitions`` for the streaming queries
+    started inside the block, and restore the session's value on exit.
+
+    A streaming query locks its state-store partition count at first
+    start, and stateful streaming runs without AQE coalescing. For the
+    bounded availableNow runs here the count is one partition per core,
+    at most 8: every stateful stage then runs in one task wave, and no
+    per-partition state-store setup is paid for a few thousand keys. (A
+    long-running deployment sizes it to key cardinality instead.)"""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    n = min(8, spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_to_memory(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow trigger)
     into an in-memory sink and return the materialized result table.
@@ -174,13 +196,7 @@ def run_to_memory(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
     the final table a pure function of the input files."""
     name = f"stream_result_{next(_sink_counter)}"
     spark = sdf.sparkSession
-    # A streaming query locks its state-store partitioning at first start;
-    # for these bounded availableNow runs a smaller count avoids paying
-    # per-partition state-store setup 32x for a few thousand keys. (A real
-    # deployment sizes this to key cardinality / executor count instead.)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with bounded_stream_partitions(spark):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -189,8 +205,6 @@ def run_to_memory(sdf: DataFrame, output_mode: str = "complete") -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 

@@ -115,6 +115,60 @@ def test_tumbling_counts_match_batch(spark, tmp_path):
     }
 
 
+def test_run_to_memory_state_store_is_one_wave(spark, tmp_path):
+    """The stateful stage runs min(8, cores) state-store partitions, and
+    the session's shuffle partitions come back after the run — also when
+    the query fails to start."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+    from pyspark.errors import AnalysisException
+
+    class Parts(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen += [
+                op.numShufflePartitions for op in event.progress.stateOperators
+            ]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    base = tmp_path / "stream_in"
+    base.mkdir()
+    _write_batch(
+        spark, str(base / "a.parquet"), [(1, _nanos(10, 5), 1, "view", 1.0, "{}")]
+    )
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    listener = Parts()
+    spark.conf.set(key, "13")
+    spark.streams.addListener(listener)
+    try:
+        run_to_memory(tumbling_counts(events_stream(spark, str(base))), "complete")
+        assert spark.conf.get(key) == "13"
+        with pytest.raises(AnalysisException):
+            # complete mode without an aggregate is refused at start()
+            run_to_memory(events_stream(spark, str(base)), "complete")
+        assert spark.conf.get(key) == "13"
+        deadline = time.time() + 30
+        while not listener.seen and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, prev)
+    want = min(8, spark.sparkContext.defaultParallelism)
+    assert listener.seen and set(listener.seen) == {want}
+
+
 @pytest.mark.slow
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Two sequenced micro-batches (maxFilesPerTrigger=1): batch 2 carries

@@ -850,6 +850,28 @@ def test_fs_em_replay_and_separation(spark):
     assert out["brand"].m_hat > out["brand"].u_hat
 
 
+def test_fs_em_no_blocked_pairs_is_empty(spark):
+    """Every block holds one part, so there is no pair to compare: the
+    oracle's recursive walk has no round row and the answer is empty —
+    zero rows, with the schema the fitted case has."""
+    rows = [
+        (k, f"part blk{k}", f"B{k}", f"T{k}", 10, 1.0) for k in range(6)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "p_partkey long, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double",
+    )
+    with tempfile.TemporaryDirectory() as d:
+        df.write.parquet(os.path.join(d, "part.parquet"))
+        out = w6.fs_em_parameter_estimation(spark, d)
+        assert out.count() == 0
+    assert out.schema.simpleString() == (
+        "struct<field:string,m_hat:double,u_hat:double,p_hat:double,"
+        "n_pairs:bigint>"
+    )
+
+
 def test_aalen_johansen_hand_fixture(spark):
     """Six users, two competing causes, hand-walked AJ table; CIFs sum
     with survival to 1 at the last step when no censoring remains."""

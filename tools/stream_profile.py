@@ -34,9 +34,7 @@ def main() -> None:
         t0 = time.time()
         nm = f"stream_result_{next(W._sink_counter)}"
         sp = sdf.sparkSession
-        prev = sp.conf.get("spark.sql.shuffle.partitions")
-        sp.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with W.bounded_stream_partitions(sp):
             t_start0 = time.time()
             q = (
                 sdf.writeStream.format("memory")
@@ -48,8 +46,6 @@ def main() -> None:
             t_started = time.time()
             q.awaitTermination()
             t_done = time.time()
-        finally:
-            sp.conf.set("spark.sql.shuffle.partitions", prev)
         captured.append(
             {
                 "start_call": round(t_started - t_start0, 3),
